@@ -19,13 +19,34 @@ from pyspark.sql import functions as F
 from ocr_documents_spark.jobs import lake as L
 
 
+# the metrics-table columns summarize reads (types as lake.bucket_metrics
+# writes them)
+_METRICS_COLUMNS = ("bucket int, committed_at double, n_docs long, "
+                    "n_completed long, n_partial long, "
+                    "n_rejected_quality long, n_rejected_classification long, "
+                    "n_fields long")
+
+
 def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
     lake = L.Lake(lake_root, n_buckets)
     done = L.completed_buckets(spark, lake)
     out = {"buckets_total": n_buckets, "buckets_completed": len(done),
            "buckets_pending": n_buckets - len(done)}
-    try:
-        m = spark.read.parquet(lake.path(L.METRICS))
+
+    def read(table: str, columns: str):
+        """The table, or None when it does not exist.  A table that exists
+        but cannot be read raises: it is not an empty lake.  ``columns``
+        pins the schema, so an existing table with no rows (a partitioned
+        write of an empty batch leaves no data file) reads as empty."""
+        path = lake.path(table)
+        if not L._path_exists(spark, path):
+            return None
+        return spark.read.schema(columns).parquet(path)
+
+    m = read(L.METRICS, _METRICS_COLUMNS)
+    if m is None:
+        out["metrics"] = "none"
+    else:
         latest = (m.withColumn(
             "rn", F.row_number().over(
                 Window.partitionBy("bucket").orderBy(F.desc("committed_at"))))
@@ -39,20 +60,13 @@ def summarize(spark: SparkSession, lake_root: str, n_buckets: int) -> dict:
             F.sum("n_fields").alias("fields"),
         ).first()
         out.update({k: int(agg[k] or 0) for k in agg.asDict()})
-    except Exception:
-        out["metrics"] = "none"
-    try:
-        out["rejected_malformed"] = spark.read.parquet(
-            lake.path(L.REJECTS)).count()
-    except Exception:
-        out["rejected_malformed"] = 0
+    rejects = read(L.REJECTS, "doc_id string")
+    out["rejected_malformed"] = 0 if rejects is None else rejects.count()
     # streaming surface (idempotent per-batch partitions: no replay
     # double-count) — previously the CLI was blind to streamed docs
-    try:
-        sm = spark.read.parquet(lake.path(L.STREAM_METRICS))
-        out["streamed_docs"] = int(sm.agg(F.sum("n_docs")).first()[0] or 0)
-    except Exception:
-        out["streamed_docs"] = 0
+    sm = read(L.STREAM_METRICS, "n_docs long")
+    out["streamed_docs"] = (
+        0 if sm is None else int(sm.agg(F.sum("n_docs")).first()[0] or 0))
     return out
 
 

@@ -12,7 +12,8 @@ The scale structure is the point:
   only, so 100 TB of text collapses to ~10^7-10^8 (word, n) rows, and
   the standard ``top_words``/``min_count`` cap (subword-nmt, HF
   tokenizers do the same) makes the learning state BOUNDED and
-  collectable — the same explicit-bound argument as ``skew.hot_keys``.
+  collectable — the same explicit-bound argument as a share-thresholded
+  hot-key census (at most 1/threshold rows).
 * ``learn_bpe_merges`` runs the inherently-sequential merge loop on the
   capped census driver-side (each merge depends on the previous one;
   distributing a 50k-iteration loop of tiny aggregations would add 100k
@@ -99,7 +100,7 @@ def learn_bpe_merges(census: DataFrame | Sequence[tuple[str, int]],
 
     Accepts the ``word_census`` DataFrame (collected here — cap it with
     ``top_words`` first; the bound is the caller's explicit contract,
-    exactly like ``hot_keys``'s 1/threshold) or an already-local list.
+    exactly like a hot-key census's 1/threshold) or an already-local list.
     Ties break deterministically: max count, then lexicographically
     smallest (a, b).
 

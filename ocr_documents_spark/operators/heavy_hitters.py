@@ -1,8 +1,8 @@
 """Mergeable Misra-Gries heavy hitters: hot keys in ONE bounded pass.
 
-``skew.hot_keys`` is an exact census — correct, and cheap in shuffle
-ROWS (partial aggregation sends one row per distinct key per map task),
-but at 10^12 documents with ~10^10 distinct keys (URLs, templates,
+An exact census (``groupBy(key).count()`` filtered by share) is
+correct, and cheap in shuffle ROWS (partial aggregation sends one row
+per distinct key per map task), but at 10^12 documents with ~10^10 distinct keys (URLs, templates,
 customers) that is still a multi-terabyte exchange to answer a question
 whose useful output is a handful of rows.  The Misra-Gries summary
 (Misra & Gries 1982; mergeability per Agarwal et al., "Mergeable
@@ -155,7 +155,8 @@ def heavy_hitters(df: DataFrame, key_col: str,
     ``ub_count - est_count`` is the same merged deficit D for every row
     (D <= n / (k+1)); any key whose true count exceeds D is GUARANTEED
     present.  Output is ≤ k × n_partitions rows — collectable for any
-    sane k, like ``hot_keys``'s 1/threshold bound.
+    sane k, like an exact census filtered at share ``threshold`` (at
+    most 1/threshold rows).
     """
     return _merged_summaries(df, key_col, k).drop("__total_n")
 
@@ -163,7 +164,7 @@ def heavy_hitters(df: DataFrame, key_col: str,
 def approx_hot_keys(df: DataFrame, key_col: str,
                     threshold_frac: float = 0.01,
                     safety: int = 4) -> DataFrame:
-    """Sketch-backed twin of ``skew.hot_keys``: keys whose share MIGHT
+    """Sketch-backed twin of an exact share census: keys whose share MIGHT
     exceed ``threshold_frac``, guaranteed to include every key whose
     share truly does.
 

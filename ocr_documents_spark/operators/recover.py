@@ -2,9 +2,11 @@
 
 Runs after ``posexplode(spans)`` at span granularity, so a media-heavy
 document's spans are recovered in parallel across tasks (the skew unit per
-SURVEY.md §4.2).  Text spans pass through with the 85.0 born-digital
-confidence; media spans go through the deterministic decode seam in
-extractors/media.py (production slot: pytesseract/easyocr per batch).
+SURVEY.md §4.2).  The per-span rule is the oracle's own
+``pipeline_pure.recover_span_text``: text spans pass through with the 85.0
+born-digital confidence, html spans are boilerplate-stripped, media spans
+go through the deterministic decode seam in extractors/media.py
+(production slot: pytesseract/easyocr per batch).
 
 This is a SCALAR pandas UDF over three string columns returning a struct —
 all traffic rides Arrow; no per-row Python UDF anywhere in the pipeline.
@@ -16,9 +18,8 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from ..extractors.boilerplate import html_to_page_text
 from ..extractors.media import decode_media_ref
-from ..extractors.pipeline_pure import TEXT_SPAN_CONFIDENCE
+from ..extractors.pipeline_pure import recover_span_text
 
 RECOVERED_TYPE = StructType([
     StructField("text", StringType()),
@@ -43,22 +44,11 @@ def recover_span(kind: pd.Series, text: pd.Series, media_ref: pd.Series) -> pd.D
     the FIRST media span per document (probe_first_media_qc), so shipping
     six floats per recovered span through two shuffles would be pure waste.
     """
-    n = len(kind)
-    out = {"text": [""] * n, "confidence": [0.0] * n}
-    kinds = kind.to_numpy()
-    texts = text.to_numpy()
-    refs = media_ref.to_numpy()
-    for i in range(n):
-        if kinds[i] == "media":
-            page_text, conf, _qc = decode_media_ref(refs[i] or "")
-            out["text"][i] = page_text
-            out["confidence"][i] = conf
-        elif kinds[i] == "html":
-            out["text"][i] = html_to_page_text(texts[i] or "")
-            out["confidence"][i] = TEXT_SPAN_CONFIDENCE
-        else:
-            out["text"][i] = texts[i] if texts[i] is not None else ""
-            out["confidence"][i] = TEXT_SPAN_CONFIDENCE
+    out = {"text": [], "confidence": []}
+    for k, t, m in zip(kind.to_numpy(), text.to_numpy(), media_ref.to_numpy()):
+        page_text, conf = recover_span_text(k, t, m)
+        out["text"].append(page_text)
+        out["confidence"].append(conf)
     return pd.DataFrame(out)
 
 

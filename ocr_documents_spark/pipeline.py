@@ -5,7 +5,7 @@ backend/main.py:94-234 — see SURVEY.md §3.1), **skew-split** into two paths
 on ``size(spans)``:
 
 * **light path** (~99% of documents, a handful of spans each): a single
-  zero-shuffle ``mapInPandas`` stage runs recover + quality gate + classify
+  zero-shuffle ``mapInArrow`` stage runs recover + quality gate + classify
   + extract per document.  Parallelism comes from the input scan splits —
   no exploded spans ever cross the wire, so the common case is
   scan -> one Arrow stage -> sink.
@@ -16,9 +16,13 @@ on ``size(spans)``:
   blanked — no second scan, no duplicate probe eval) ->
   posexplode_outer(spans) -> salted repartition on (doc_id, span_idx) ->
   recover-text pandas UDF -> groupBy(doc_id) offset-ordered reassembly
-  (native sort_array) -> finalize mapInPandas (synthesizes rejected
-  results from the carried gate columns).  Exactly two shuffles, and only
-  over the skewed ~1%.
+  (native sort_array) -> finalize ``mapInArrow`` stage (synthesizes
+  rejected results from the carried gate columns).  Exactly two shuffles,
+  and only over the skewed ~1%.
+
+Both paths end in the same Arrow adapter (``_map_documents``) and result
+builder; they differ only in the list column it flattens (``spans`` or
+``pages``) and the shared per-document function it calls.
 
 Scale design (SURVEY.md §4.2):
 * At production scale the input Iceberg table carries a ``size_class``
@@ -35,14 +39,15 @@ Scale design (SURVEY.md §4.2):
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
+from .extractors.pipeline_pure import (process_document, process_recovered,
+                                       rejected_quality_result)
 from .operators.gate import (quality_issues_col, quality_passed_col,
                              quality_warnings_col)
 from .operators.recover import probe_first_media_qc, recover_span
@@ -106,7 +111,8 @@ import os as _os
 RECOVER_MS_PER_SPAN = float(
     _os.environ.get("SPARK_GRAFT_RECOVER_MS_PER_SPAN", "0.05"))
 TARGET_TASK_SECONDS = 5.0
-# kept as the explicit-override unit tests' forced-salt threshold
+# floor of the cost-model split; tests force the heavy path by passing
+# an explicit heavy_threshold (16, 4) instead
 HEAVY_SPAN_THRESHOLD = 64
 
 
@@ -137,123 +143,78 @@ def _append_result(rows: dict, r: dict) -> None:
     rows["out_spans"].append([
         {"kind": k, "text": t, "media_ref": m, "order": o}
         for (k, t, m, o) in r["out_spans"]])
-    rows["quality_issues"].append(list(r.get("quality_issues", [])))
-    rows["quality_warnings"].append(list(r.get("quality_warnings", [])))
+    rows["quality_issues"].append(list(r["quality_issues"]))
+    rows["quality_warnings"].append(list(r["quality_warnings"]))
 
 
-_RESULT_KEYS = ("doc_id", "document_type", "classify_confidence",
-                "overall_confidence", "status", "n_pages", "fields",
-                "out_spans", "quality_issues", "quality_warnings")
+def _map_documents(df: DataFrame, list_col: str, per_doc) -> DataFrame:
+    """The one extraction adapter: ``df`` -> RESULT_SCHEMA via mapInArrow.
 
+    ``per_doc(row, items)`` is a shared per-document function from
+    extractors/pipeline_pure.py (the oracle's own code, so span-sequence
+    equality holds by construction).  ``row`` maps every column except
+    ``list_col`` to its value; ``items`` is that row's ``list_col``
+    elements as dicts keyed by struct field name.
 
-def _finalize_batches(forced_type: str | None = None):
-    """Classify + extract + status per document over recovered pages.
-
-    Imports inside the function body so the closure ships cleanly via
-    --py-files; rule tables compile once per executor process at import.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_documents_spark.extractors.pipeline_pure import (
-            process_recovered, rejected_quality_result)
-
-        for pdf in batches:
-            n = len(pdf)
-            # gate riders are present on the heavy path; plain
-            # recover_and_regroup callers (no gate) default to passed
-            oks = pdf["quality_ok"] if "quality_ok" in pdf.columns else [True] * n
-            issues = (pdf["quality_issues"]
-                      if "quality_issues" in pdf.columns else [None] * n)
-            totals = (pdf["n_spans_total"]
-                      if "n_spans_total" in pdf.columns else [0] * n)
-            rows = {k: [] for k in _RESULT_KEYS}
-            for doc_id, pages_raw, warns, ok, iss, total in zip(
-                    pdf["doc_id"], pdf["pages"], pdf["quality_warnings"],
-                    oks, issues, totals):
-                warns = [] if warns is None else list(warns)
-                if ok is not None and not ok:
-                    r = rejected_quality_result(
-                        doc_id, int(total),
-                        None if iss is None else list(iss), warns)
-                else:
-                    pages = [{"text": p["text"] if p["text"] is not None else "",
-                              "confidence": float(p["confidence"]),
-                              "media_ref": p["media_ref"]} for p in pages_raw]
-                    r = process_recovered(doc_id, pages, forced_type,
-                                          quality_warnings=warns)
-                _append_result(rows, r)
-            yield pd.DataFrame(rows)
-    return fn
-
-
-# RESULT_SCHEMA as explicit pyarrow types (mapInArrow yields RecordBatches
-# that must match the declared spark schema exactly)
-def _result_arrow_schema():
-    import pyarrow as pa
-    field_t = pa.struct([("name", pa.string()), ("value", pa.string()),
-                         ("confidence", pa.float64()), ("page", pa.int32()),
-                         ("media_ref", pa.string())])
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()), ("order", pa.int32())])
-    return pa.schema([
-        ("doc_id", pa.string()), ("document_type", pa.string()),
-        ("classify_confidence", pa.float64()),
-        ("overall_confidence", pa.float64()), ("status", pa.string()),
-        ("n_pages", pa.int32()), ("fields", pa.list_(field_t)),
-        ("out_spans", pa.list_(span_t)),
-        ("quality_issues", pa.list_(pa.string())),
-        ("quality_warnings", pa.list_(pa.string())),
-    ])
-
-
-def _direct_batches(skip_quality_check: bool, forced_type: str | None = None):
-    """Whole-document single-pass stage for the light path (mapInArrow).
-
-    Runs the same shared per-document functions as the oracle
-    (extractors/pipeline_pure.py), so span-sequence equality holds by
-    construction on this path too.
-
-    Arrow-native batch adapter (guide §4.2): the measured cost of this
-    stage was ~45% INPUT BOUNDARY — Arrow->pandas materializes every
-    span of array<struct> as a per-element dict through numpy object
-    arrays.  Here the list-of-struct column is flattened ONCE per batch
-    into four contiguous child arrays (one ``to_pylist`` each — cheap,
-    they are flat) and per-doc span dicts are rebuilt by slicing, which
-    is severalfold cheaper; the per-document extraction call and its
-    results are bit-identical.
+    The list-of-struct column is flattened ONCE per batch into contiguous
+    child arrays (one ``to_pylist`` each — cheap, they are flat) and the
+    per-document item lists are slices of one batch-wide list.
+    Arrow->pandas would instead materialize every element through numpy
+    object arrays, which measured ~45% of the stage.
     """
     def fn(batches):
         import pyarrow as pa
-        from ocr_documents_spark.extractors.pipeline_pure import process_document
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = _result_arrow_schema()
+        schema = to_arrow_schema(RESULT_SCHEMA)
         for batch in batches:
-            doc_ids = batch.column(
-                batch.schema.get_field_index("doc_id")).to_pylist()
-            spans_col = batch.column(
-                batch.schema.get_field_index("spans"))
-            lengths = spans_col.value_lengths().to_pylist()
-            flat = spans_col.flatten()
-            kinds = flat.field(0).to_pylist()
-            texts = flat.field(1).to_pylist()
-            refs = flat.field(2).to_pylist()
-            offs = flat.field(3).to_pylist()
-            rows = {k: [] for k in _RESULT_KEYS}
+            nested = batch.column(list_col)
+            lengths = nested.value_lengths().to_pylist()
+            flat = nested.flatten()
+            names = [f.name for f in flat.type]
+            items = [dict(zip(names, vals)) for vals in zip(
+                *(flat.field(i).to_pylist() for i in range(len(names))))]
+            cols = {name: batch.column(name).to_pylist()
+                    for name in batch.schema.names if name != list_col}
+            rows = {name: [] for name in schema.names}
             pos = 0
-            for i, doc_id in enumerate(doc_ids):
-                ln = lengths[i] or 0
-                spans = [{"kind": kinds[j], "text": texts[j],
-                          "media_ref": refs[j], "offset": offs[j]}
-                         for j in range(pos, pos + ln)]
+            for i, ln in enumerate(lengths):
+                ln = ln or 0
+                row = {name: col[i] for name, col in cols.items()}
+                _append_result(rows, per_doc(row, items[pos:pos + ln]))
                 pos += ln
-                r = process_document(
-                    doc_id, spans,
-                    skip_quality_check=skip_quality_check,
-                    forced_type=forced_type)
-                _append_result(rows, r)
             yield pa.RecordBatch.from_pydict(
                 {name: pa.array(rows[name], type=schema.field(name).type)
                  for name in rows}, schema=schema)
-    return fn
+    return df.mapInArrow(fn, RESULT_SCHEMA)
+
+
+def _document_result(row: dict, spans: list, skip_quality_check: bool,
+                     forced_type: str | None) -> dict:
+    """Light path: the whole oracle pipeline over one document's spans."""
+    return process_document(row["doc_id"], spans,
+                            skip_quality_check=skip_quality_check,
+                            forced_type=forced_type)
+
+
+def _recovered_result(row: dict, pages: list,
+                      forced_type: str | None) -> dict:
+    """Heavy path: classify + extract + status over the regrouped pages,
+    or the rejected result the carried gate columns call for."""
+    if not row["quality_ok"]:
+        return rejected_quality_result(
+            row["doc_id"], row["n_spans_total"], row["quality_issues"],
+            row["quality_warnings"])
+    return process_recovered(row["doc_id"], pages, forced_type,
+                             quality_warnings=row["quality_warnings"])
+
+
+def _direct_stage(docs: DataFrame, skip_quality_check: bool,
+                  forced_type: str | None) -> DataFrame:
+    """Whole-document single pass: gate, recover, classify, extract."""
+    return _map_documents(docs, "spans", partial(
+        _document_result, skip_quality_check=skip_quality_check,
+        forced_type=forced_type))
 
 
 def with_quality_gate(docs: DataFrame, skip_quality_check: bool = False) -> DataFrame:
@@ -290,7 +251,7 @@ def with_quality_gate(docs: DataFrame, skip_quality_check: bool = False) -> Data
             .withColumn("quality_warnings", warnings))
 
 
-def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
+def recover_and_regroup(docs: DataFrame) -> DataFrame:
     """docs -> one row per doc with offset-ordered recovered pages (+ every
     doc-level column besides doc_id/spans — the gate's quality_* triage
     surface, n_spans_total — carried through the fan-out as riders).
@@ -305,9 +266,6 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
     explode as a single null-span row (posexplode_outer) and regroup to
     ``pages = []`` — collect_list drops the null page struct.
     """
-    if "quality_warnings" not in docs.columns:
-        docs = docs.withColumn("quality_warnings",
-                               F.array().cast("array<string>"))
     riders = [c for c in docs.columns if c not in ("doc_id", "spans")]
     spans = docs.select("doc_id", *riders,
                         F.posexplode_outer("spans").alias("span_idx", "span"))
@@ -316,18 +274,17 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
         "doc_id", "span_idx", "span",
         *[F.when(first_row, F.col(c)).alias(c) for c in riders])
 
-    if salt:
-        # spread media-heavy documents across tasks; without this, a doc
-        # with 4096 media spans pins its entire recovery to one input split.
-        # The partition count is EXPLICIT: AQE coalesces shuffles by bytes,
-        # and a few thousand span rows look tiny even when each costs
-        # ~100ms-1s of OCR — byte-based coalescing would serialize exactly
-        # the work this shuffle exists to spread (user-specified counts are
-        # exempt from AQE coalescing).
-        sess = docs.sparkSession
-        n_parts = max(sess.sparkContext.defaultParallelism * 2,
-                      int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
-        spans = spans.repartition(n_parts, "doc_id", "span_idx")
+    # spread media-heavy documents across tasks; without this, a doc
+    # with 4096 media spans pins its entire recovery to one input split.
+    # The partition count is EXPLICIT: AQE coalesces shuffles by bytes,
+    # and a few thousand span rows look tiny even when each costs
+    # ~100ms-1s of OCR — byte-based coalescing would serialize exactly
+    # the work this shuffle exists to spread (user-specified counts are
+    # exempt from AQE coalescing).
+    sess = docs.sparkSession
+    n_parts = max(sess.sparkContext.defaultParallelism * 2,
+                  int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
+    spans = spans.repartition(n_parts, "doc_id", "span_idx")
 
     rec = spans.select(
         "doc_id",
@@ -351,7 +308,6 @@ def recover_and_regroup(docs: DataFrame, salt: bool = True) -> DataFrame:
 
 
 def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
-                 salt: bool = True,
                  heavy_threshold: int | None = None,
                  forced_type: str | None = None) -> DataFrame:
     """Full extraction: docs(doc_id, spans) -> RESULT_SCHEMA DataFrame.
@@ -362,8 +318,8 @@ def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
     run the salted explode/regroup path.  ``heavy_threshold=None`` derives
     the split from the recovery cost model (see auto_heavy_threshold):
     cheap recovery -> everything direct, zero shuffles; expensive OCR ->
-    media-heavy docs fan out.  ``salt=False`` forces everything through the
-    direct stage regardless.
+    media-heavy docs fan out.  A split at or above ``NO_SALT_CUTOFF`` runs
+    every document through the direct stage.
 
     ``forced_type`` skips classification and extracts every document as
     that type — the reference's explicit ``document_type`` upload parameter
@@ -377,9 +333,8 @@ def run_pipeline(docs: DataFrame, skip_quality_check: bool = False,
     # splits without a shuffle; no-op on a sanely-split scan
     from .functions.fanout import fan_in
     docs = fan_in(docs)
-    if not salt or heavy_threshold >= NO_SALT_CUTOFF:
-        return docs.mapInArrow(
-            _direct_batches(skip_quality_check, forced_type), RESULT_SCHEMA)
+    if heavy_threshold >= NO_SALT_CUTOFF:
+        return _direct_stage(docs, skip_quality_check, forced_type)
     return (light_branch(docs, heavy_threshold, skip_quality_check,
                          forced_type)
             .unionByName(heavy_branch(docs, heavy_threshold,
@@ -394,8 +349,8 @@ def light_branch(docs: DataFrame, heavy_threshold: int,
     Shared by run_pipeline and tools/heavy_diag.py so the diagnostic
     always measures the production branch shape, never a hand-copy.
     """
-    return docs.filter(F.size("spans") <= heavy_threshold).mapInArrow(
-        _direct_batches(skip_quality_check, forced_type), RESULT_SCHEMA)
+    return _direct_stage(docs.filter(F.size("spans") <= heavy_threshold),
+                         skip_quality_check, forced_type)
 
 
 def heavy_branch(docs: DataFrame, heavy_threshold: int,
@@ -429,8 +384,8 @@ def heavy_branch(docs: DataFrame, heavy_threshold: int,
         .otherwise(F.array().cast(docs.schema["spans"].dataType))
         .alias("spans"),
     )
-    return recover_and_regroup(pruned, salt=True).mapInPandas(
-        _finalize_batches(forced_type), RESULT_SCHEMA)
+    return _map_documents(recover_and_regroup(pruned), "pages", partial(
+        _recovered_result, forced_type=forced_type))
 
 
 def read_docs(spark: SparkSession, path: str) -> DataFrame:

@@ -224,18 +224,3 @@ def curation_committer(lake, bench: DataFrame | None = None,
             sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return commit_batch
-
-
-def curate_stream(spark, docs_path: str, lake_root: str, n_buckets: int,
-                  checkpoint_dir: str, schema: str =
-                  "doc_id long, text string, source string",
-                  bench: DataFrame | None = None):
-    """Continuous curation over a docs directory (parquet file source);
-    wire ``.start()`` on the returned writer."""
-    from ..jobs import lake as L
-    lake = L.Lake(lake_root, n_buckets)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 8).parquet(docs_path))
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(curation_committer(lake, bench)))

@@ -11,6 +11,28 @@ from ocr_documents_spark.fixtures.gen import generate_docs
 N_DOCS = 150
 
 
+def expected_row(golden: dict) -> dict:
+    """The oracle's result dict as the Spark result row it must equal,
+    every RESULT_SCHEMA column included."""
+    return {
+        "doc_id": golden["doc_id"],
+        "document_type": golden["document_type"],
+        "classify_confidence": float(golden["classify_confidence"]),
+        "overall_confidence": float(golden["overall_confidence"]),
+        "status": golden["status"],
+        "n_pages": golden["n_pages"],
+        "fields": [{"name": name,
+                    "value": None if d["value"] is None else str(d["value"]),
+                    "confidence": float(d["confidence"]), "page": d["page"],
+                    "media_ref": d["media_ref"]}
+                   for name, d in golden["fields"].items()],
+        "out_spans": [{"kind": k, "text": t, "media_ref": m, "order": o}
+                      for (k, t, m, o) in golden["out_spans"]],
+        "quality_issues": golden["quality_issues"],
+        "quality_warnings": golden["quality_warnings"],
+    }
+
+
 @pytest.fixture(scope="module")
 def corpus():
     return generate_docs(N_DOCS)
@@ -55,6 +77,21 @@ def test_status_and_confidence_equality(spark_results, corpus):
         if golden["status"] in ("completed", "partial"):
             assert got["document_type"] == golden["document_type"]
             assert [f["name"] for f in got["fields"]] == list(golden["fields"])
+
+
+def test_every_result_column_equality(spark_results, corpus):
+    """Whole result rows, not just spans and status: field values,
+    confidences, pages and media refs, classify_confidence and n_pages
+    must equal the oracle's exactly on both physical plans."""
+    from ocr_documents_spark.pipeline import RESULT_SCHEMA
+    mismatches = []
+    for d in corpus:
+        want = expected_row(process_document(d["doc_id"], d["spans"]))
+        got = spark_results[d["doc_id"]].asDict(recursive=True)
+        assert list(got) == list(want) == RESULT_SCHEMA.fieldNames()
+        if got != want:
+            mismatches.append((d["doc_id"], want, got))
+    assert not mismatches, f"{len(mismatches)} docs mismatch; first: {mismatches[0]}"
 
 
 def test_all_statuses_exercised(spark_results):

@@ -99,8 +99,13 @@ def test_pipeline_forced_salt_has_exactly_two_shuffles(spark):
         [(d["doc_id"],
           [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
          for d in generate_docs(30)], DOCS_SCHEMA)
+    results = run_pipeline(docs, heavy_threshold=16)
     # salt fan-out + doc_id regroup, nothing else
-    assert exchange_count(run_pipeline(docs, heavy_threshold=16)) == 2
+    assert exchange_count(results) == 2
+    # light and heavy paths both end in the one Arrow adapter
+    plan = plan_of(results)
+    assert "MapInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 2, plan
 
 
 def test_pipeline_gate_probe_evaluates_once_single_scan(spark, tmp_path):

@@ -223,6 +223,23 @@ def test_lake_status_summary(spark, small_lake):
     assert s["docs"] > 0
 
 
+def test_lake_status_absent_vs_unreadable(spark, tmp_path):
+    """Only an absent table reads as "none"/0; a table that exists but
+    cannot be read raises instead of passing for an empty lake."""
+    from ocr_documents_spark.jobs.status import summarize
+    lake = L.Lake(str(tmp_path / "lake"), 4)
+    s = summarize(spark, lake.root, lake.n_buckets)
+    assert s["metrics"] == "none"
+    assert s["rejected_malformed"] == 0 and s["streamed_docs"] == 0
+    assert s["buckets_pending"] == 4
+
+    os.makedirs(lake.path(L.METRICS))
+    with open(os.path.join(lake.path(L.METRICS), "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        summarize(spark, lake.root, lake.n_buckets)
+
+
 def test_extract_stream_matches_batch(spark, tmp_path):
     docs_path = str(tmp_path / "docs")
     write_docs_parquet(docs_path, 30, docs_per_file=10)

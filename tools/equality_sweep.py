@@ -1,6 +1,7 @@
-"""Large-scale span-sequence equality sweep: Spark pipeline vs the
-single-node oracle over N deterministic docs, on BOTH physical plans
-(cost-model direct and forced-salt explode/regroup).
+"""Large-scale equality sweep: Spark pipeline vs the single-node oracle
+over N deterministic docs, on BOTH physical plans (cost-model direct and
+forced-salt explode/regroup).  Whole result rows are compared — every
+RESULT_SCHEMA column, not only the span sequence and status.
 
 Usage: python tools/equality_sweep.py [n_docs]     (default 2000)
 
@@ -22,6 +23,9 @@ round-2 census (3837/716/295/152) reproduced exactly.
 Re-run end of round 6, after the media-decode tweak (utf-8 decode
 before json parse + itemgetter sort key): 5000/5000 on both plans,
 census (3837/716/295/152) reproduced exactly.
+Re-run after both paths moved onto the one mapInArrow adapter, now
+comparing whole rows: 5000/5000 on both plans, census (3837/716/295/152)
+reproduced exactly.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ def main(n_docs: int = 2000) -> int:
     from ocr_documents_spark.fixtures.gen import generate_docs
     from ocr_documents_spark.pipeline import DOCS_SCHEMA, run_pipeline
     from ocr_documents_spark.session import get_spark
+    from tests.test_pipeline_equality import expected_row
 
     spark = get_spark("equality-sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -48,15 +53,14 @@ def main(n_docs: int = 2000) -> int:
            for s in d["spans"]]) for d in corpus], DOCS_SCHEMA)
     golden = {d["doc_id"]: process_document(d["doc_id"], d["spans"])
               for d in corpus}
+    want = {did: expected_row(g) for did, g in golden.items()}
 
     failures = 0
     for label, thr in (("auto-direct", None), ("forced-salt", 16)):
         rows = {r["doc_id"]: r
                 for r in run_pipeline(docs, heavy_threshold=thr).collect()}
-        bad = [did for did, g in golden.items()
-               if rows[did]["status"] != g["status"]
-               or [(s["kind"], s["text"], s["media_ref"], s["order"])
-                   for s in rows[did]["out_spans"]] != g["out_spans"]]
+        bad = [did for did in golden
+               if rows[did].asDict(recursive=True) != want[did]]
         print(f"{label}: {n_docs - len(bad)}/{n_docs} docs equal"
               + (f"; first mismatch {bad[0]}" if bad else ""))
         failures += len(bad)
