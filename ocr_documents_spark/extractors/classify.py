@@ -20,6 +20,10 @@ Two rule-based classifiers, matching the reference's scoring semantics:
 Rule tables are data; patterns are pre-compiled once at import so executor
 processes pay the compile cost a single time (mirrors the reference's
 singleton classifiers, and is the right shape for SCALAR pandas UDFs).
+The enhanced rules sit behind the required-literal prefilter of
+:mod:`.rx`: on ASCII text, a rule whose keyword is absent is answered
+without a regex scan; every other text runs the same compiled pattern, so
+results keep Python ``re`` semantics exactly.
 
 The scoring surface is a term-frequency dot product with binary weights —
 the "rules-plus-TF-IDF" classifier named by the north star.  Both
@@ -31,6 +35,8 @@ from __future__ import annotations
 
 import re
 from typing import Optional, Tuple
+
+from . import rx
 
 _I = re.IGNORECASE
 
@@ -149,10 +155,10 @@ ENHANCED_RULES: dict[str, tuple[list[str], list[str], list[str], float, float]] 
 _ENH_COMPILED = [
     (
         dt,
-        [re.compile(p, _I) for p in mand],
-        [re.compile(p, _I) for p in ENHANCED_EXCLUSIONS.get(dt, [])],
-        [re.compile(p, _I) for p in strong],
-        [re.compile(p, _I) for p in weak],
+        [rx.compile(p, _I) for p in mand],
+        [rx.compile(p, _I) for p in ENHANCED_EXCLUSIONS.get(dt, [])],
+        [rx.compile(p, _I) for p in strong],
+        [rx.compile(p, _I) for p in weak],
         weight,
         req,
     )

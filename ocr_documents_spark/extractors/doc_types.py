@@ -18,6 +18,7 @@ import re
 from datetime import datetime, timedelta
 from typing import Dict, List, Optional, Tuple
 
+from . import rx
 from .fields_generic import extract_config_fallback
 from .registry import FALLBACK_FIELD_PATTERNS
 
@@ -248,7 +249,7 @@ def _labor_name(text: str) -> Optional[str]:
 
 
 def _number_in_range(text: str, lo: int, hi: int) -> Optional[str]:
-    matches = re.findall(r"\b\d{%d,%d}\b" % (lo, hi), text)
+    matches = rx.findall(r"\b\d{%d,%d}\b" % (lo, hi), text)
     return matches[0] if matches else None
 
 
@@ -267,7 +268,7 @@ def _labor_expiry(text: str) -> Optional[str]:
 
 
 def _labor_profession(text: str) -> Optional[str]:
-    m = re.search(r"Profession\s*[:\.]?\s*([^\n]+)", text, _I)
+    m = rx.search(r"Profession\s*[:\.]?\s*([^\n]+)", text, _I)
     if m:
         prof = m.group(1).strip()
         if len(prof) > 2:
@@ -281,7 +282,7 @@ def _labor_profession(text: str) -> Optional[str]:
     lower = text.lower()
     for kw in ("manager", "engineer", "technician", "driver", "worker", "supervisor"):
         if kw in lower:
-            m = re.search(rf"\b([A-Za-z ]*{kw}[A-Za-z ]*)\b", lower, _I)
+            m = rx.search(rf"\b([A-Za-z ]*{kw}[A-Za-z ]*)\b", lower, _I)
             if m:
                 prof = m.group(1).strip()
                 if 3 <= len(prof) <= 40:
@@ -308,7 +309,7 @@ def _labor_establishment(text: str) -> Optional[str]:
             return _ESTABLISHMENT_LABEL.sub("", company).strip().upper()
     lower = text.lower()
     if "llc" in lower or "l.l.c" in lower:
-        m = re.search(r"([A-Z][A-Za-z\s&\-]{5,50}(?:LLC|L\.L\.C))", text, _I)
+        m = rx.search(r"([A-Z][A-Za-z\s&\-]{5,50}(?:LLC|L\.L\.C))", text, _I)
         if m:
             return _ESTABLISHMENT_LABEL.sub("", m.group(1)).strip().upper()
     return None
@@ -355,23 +356,23 @@ _RV_PROF_KEYWORDS = ["ENGINEER", "MUHREM", "NOT ALLOWED", "ALLOWED TO WORK",
 def extract_residence_visa(text: str) -> Dict:
     out: Dict[str, Dict] = {}
 
-    m = re.search(r"(?:U\.I\.D\.No|UID|U\.I\.D)\s*[:\s]*(\d{9})", text, _I)
+    m = rx.search(r"(?:U\.I\.D\.No|UID|U\.I\.D)\s*[:\s]*(\d{9})", text, _I)
     if m:
         out["uid_number"] = _field(m.group(1), 95.0, "VISA_OCR")
     else:
-        m = re.search(r"\b(\d{9})\b", text)
+        m = rx.search(r"\b(\d{9})\b", text)
         if m:
             out["uid_number"] = _field(m.group(1), 85.0, "VISA_OCR")
 
     for pat in (r"(?:File|FILE)\s*[:\s]*(\d{3}/\d{4}/\d+)",
                 r"(\d{3}/\d{4}/\d+)", r"(\d{3}/\d{4})"):
-        m = re.search(pat, text)
+        m = rx.search(pat, text)
         if m:
             out["file_number"] = _field(m.group(1), 90.0, "VISA_OCR")
             break
 
     candidates = []
-    for name in re.findall(r"\b([A-Z\s]{15,})\b", text):
+    for name in rx.findall(r"\b([A-Z\s]{15,})\b", text):
         clean = name.strip()
         if len(clean) >= 15 and not any(k in clean for k in _RV_NAME_BLACKLIST):
             clean = _ARABIC.sub("", clean).strip()
@@ -382,7 +383,7 @@ def extract_residence_visa(text: str) -> Dict:
 
     for kw in _RV_PROF_KEYWORDS:
         if kw in text:
-            m = re.search(rf"([A-Z\s]*{kw}[A-Z\s]*?)(?=\s*(?:[A-Z]{{2,}}\s[A-Z]{{2,}}|$))", text)
+            m = rx.search(rf"([A-Z\s]*{kw}[A-Z\s]*?)(?=\s*(?:[A-Z]{{2,}}\s[A-Z]{{2,}}|$))", text)
             if m:
                 prof = _ARABIC.sub("", m.group(1).strip()).strip()
                 if len(prof) >= 3:
@@ -391,7 +392,7 @@ def extract_residence_visa(text: str) -> Dict:
 
     for pat in (r"([A-Z][A-Za-z\s&\-]+(?:L\.L\.C|LLC))",
                 r"((?:[A-Z]{3,}\s+){2,4}(?:TECHNICAL|SERVICES|ENGINEERING|COMPANY)[A-Z\s]*)"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             sponsor = _ARABIC.sub("", m.group(1)).strip()
             sponsor = re.sub(r"\bSponsor\b", "", sponsor, flags=_I).strip()
@@ -406,7 +407,7 @@ def extract_residence_visa(text: str) -> Dict:
             out["place_of_issue"] = _field(city.title(), 90.0, "VISA_OCR")
             break
 
-    dates = re.findall(r"(\d{4}/\d{2}/\d{2})", text)
+    dates = rx.findall(r"(\d{4}/\d{2}/\d{2})", text)
     if len(dates) >= 2:
         s = sorted(dates)
         out["issue_date"] = _field(s[0], 90.0, "VISA_OCR")
@@ -431,18 +432,18 @@ _EID_COUNTRIES = ["INDIA", "PAKISTAN", "BANGLADESH", "PHILIPPINES", "EGYPT",
 def extract_emirates_id(text: str) -> Dict:
     out: Dict[str, Dict] = {}
 
-    m = re.search(r"(\d{3}-\d{4}-\d{7}-\d)", text)
+    m = rx.search(r"(\d{3}-\d{4}-\d{7}-\d)", text)
     if m:
         out["emirates_id_number"] = _field(m.group(1), 95.0, "EMIRATES_OCR")
     else:
-        m = re.search(r"(\d{15,})", text)
+        m = rx.search(r"(\d{15,})", text)
         if m:
             n = m.group(1)[:15]
             out["emirates_id_number"] = _field(
                 f"{n[:3]}-{n[3:7]}-{n[7:14]}-{n[14]}", 90.0, "EMIRATES_OCR")
 
     candidates = []
-    for name in re.findall(r"\b([A-Z][a-z]+(?:\s+[A-Z][a-z]+){2,})\b", text):
+    for name in rx.findall(r"\b([A-Z][a-z]+(?:\s+[A-Z][a-z]+){2,})\b", text):
         if len(name) >= 15 and not any(k in name.upper() for k in _EID_NAME_BLACKLIST):
             clean = _ARABIC.sub("", name).strip()
             if len(clean) >= 15:
@@ -450,7 +451,7 @@ def extract_emirates_id(text: str) -> Dict:
     if candidates:
         out["name_on_emirates_id"] = _field(max(candidates, key=len), 85.0, "EMIRATES_OCR")
 
-    dates = re.findall(r"\b(\d{2}/\d{2}/\d{4})\b", text)
+    dates = rx.findall(r"\b(\d{2}/\d{2}/\d{4})\b", text)
     if len(dates) >= 3:
         s = sorted(dates, key=lambda d: (int(d[6:10]), int(d[3:5]), int(d[0:2])))
         out["date_of_birth"] = _field(s[0], 90.0, "EMIRATES_OCR")
@@ -469,7 +470,7 @@ def extract_emirates_id(text: str) -> Dict:
             break
 
     for pat in (r"\b([MF])\b", r"(?:Sex)[:\s]*([MF]+)"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             sex = m.group(1).upper()
             if sex == "M":
@@ -492,11 +493,11 @@ _DMY_DATE = re.compile(r"([0-3]?\d[/-][0-1]?\d[/-]\d{4})")
 
 def _label_or_next(lines: List[str], idx: int, pattern: str,
                    conf_here: float, conf_next: float) -> Optional[Tuple[str, float]]:
-    m = re.search(pattern, lines[idx])
+    m = rx.search(pattern, lines[idx])
     if m:
         return m.group(), conf_here
     if idx + 1 < len(lines):
-        m = re.search(pattern, lines[idx + 1])
+        m = rx.search(pattern, lines[idx + 1])
         if m:
             return m.group(), conf_next
     return None
@@ -511,7 +512,7 @@ def extract_visit_visa(text: str) -> Dict:
     for line in lines:
         u = line.upper()
         if any(kw in u for kw in _VV_KEYWORDS):
-            if re.search(r"\b\d+\s*(?:DAY|DAYS|MONTH|MONTHS)\b", u):
+            if rx.search(r"\b\d+\s*(?:DAY|DAYS|MONTH|MONTHS)\b", u):
                 visa_lines.append(line.strip())
             elif "VISA" in u or "TOURIST" in u or "VISIT" in u:
                 visa_lines.append(line.strip())
@@ -540,7 +541,7 @@ def extract_visit_visa(text: str) -> Dict:
             dm = _DMY_DATE.search(line)
             if dm:
                 date_value = dm.group(1).replace("-", "/")
-                pm = re.search(r"([A-Z][a-z]+(?:\s[A-Z][a-z]+)*)", line[dm.end():])
+                pm = rx.search(r"([A-Z][a-z]+(?:\s[A-Z][a-z]+)*)", line[dm.end():])
                 if pm:
                     out["date_place_of_issue"] = _field(
                         f"{date_value}, {pm.group(1)}", 88.0, src)
@@ -603,12 +604,12 @@ def extract_visit_visa(text: str) -> Dict:
 
     for i, line in enumerate(lines):
         if "PASSPORT" in line.upper():
-            m = re.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", line)
+            m = rx.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", line)
             if m:
                 out["passport_number"] = _field(m.group(1), 92.0, src)
                 break
             if i + 1 < len(lines):
-                m = re.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", lines[i + 1])
+                m = rx.search(r"\b([A-Z]{1,2}[0-9]{7,8})\b", lines[i + 1])
                 if m:
                     out["passport_number"] = _field(m.group(1), 90.0, src)
                     break
@@ -649,16 +650,16 @@ def extract_home_country_id(text: str) -> Dict:
 
     for line in lines:
         squeezed = re.sub(r"[\s-]", "", line)
-        if re.match(r"^[2-9]\d{11}$", squeezed):
+        if rx.match(r"^[2-9]\d{11}$", squeezed):
             out["aadhaar_number"] = _field(
                 f"{squeezed[0:4]} {squeezed[4:8]} {squeezed[8:12]}", 95.0, src)
             break
-        if re.match(r"^[2-9]\d{3}\s\d{4}\s\d{4}$", line.strip()):
+        if rx.match(r"^[2-9]\d{3}\s\d{4}\s\d{4}$", line.strip()):
             out["aadhaar_number"] = _field(line.strip(), 95.0, src)
             break
 
     for line in lines:
-        m = re.search(r"DOB[:\s]*([0-3]?\d[/\-][0-1]?\d[/\-]\d{4})", line, _I)
+        m = rx.search(r"DOB[:\s]*([0-3]?\d[/\-][0-1]?\d[/\-]\d{4})", line, _I)
         if m:
             out["date_of_birth"] = _field(m.group(1).replace("-", "/"), 90.0, src)
             break
@@ -706,7 +707,7 @@ def extract_home_country_id(text: str) -> Dict:
             continue
         if capturing:
             squeezed = re.sub(r"[\s-]", "", clean)
-            if re.match(r"^[2-9]\d{11}$", squeezed):
+            if rx.match(r"^[2-9]\d{11}$", squeezed):
                 break
             if any(s in u for s in _AADHAAR_ADDR_SKIP):
                 continue
@@ -731,7 +732,7 @@ def extract_visa_cancellation(text: str) -> Dict:
     for pat in (r"name\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})",
                 r"applicant\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})",
                 r"employee\s*[:\-]?\s*([A-Z][A-Za-z\s]{5,50})"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             name = re.sub(r"\s+", " ", m.group(1).strip())
             if len(name.split()) >= 2:
@@ -741,7 +742,7 @@ def extract_visa_cancellation(text: str) -> Dict:
     for pat in (r"passport\s*(?:no|number|#)?\s*[:\-]?\s*([A-Z0-9]{6,9})",
                 r"passport\s*([A-Z0-9]{6,9})",
                 r"([A-Z]{1,2}\d{6,8})"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             out["passport_number"] = _field(m.group(1).upper(), 90.0, src)
             break
@@ -749,7 +750,7 @@ def extract_visa_cancellation(text: str) -> Dict:
     for pat in (r"visa\s*(?:no|number|#)?\s*[:\-]?\s*(\d{10,15})",
                 r"residence\s*(?:no|number)?\s*[:\-]?\s*(\d{10,15})",
                 r"(?:visa|residence)\s*([0-9\/\-]{10,})"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             out["visa_number"] = _field(m.group(1), 90.0, src)
             break
@@ -762,14 +763,14 @@ def extract_visa_cancellation(text: str) -> Dict:
 
     for pat in (r"sponsor\s*(?:id|number)?\s*[:\-]?\s*(\d{10,15})",
                 r"establishment\s*(?:id|card)?\s*[:\-]?\s*(\d{10,15})"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             out["sponsor_id"] = _field(m.group(1), 85.0, src)
             break
 
     for pat in (r"sponsor\s*name\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})",
                 r"sponsor\s*[:\-]?\s*([A-Z][A-Za-z\s&\.\-]{5,100})"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             s_name = re.split(r"\s{2,}|\t|\|", m.group(1).strip())[0]
             out["sponsor_name"] = _field(s_name.upper(), 80.0, src)
@@ -778,16 +779,16 @@ def extract_visa_cancellation(text: str) -> Dict:
     for pat in (r"cancellation\s*(?:no|number|ref|reference)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
                 r"reference\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)",
                 r"transaction\s*(?:no|number)?\s*[:\-]?\s*([A-Z0-9\-\/]+)"):
-        m = re.search(pat, text, _I)
+        m = rx.search(pat, text, _I)
         if m:
             out["cancellation_ref"] = _field(m.group(1), 85.0, src)
             break
 
-    m = re.search(r"nationality\s*[:\-]?\s*([A-Za-z\s]+)", text, _I)
+    m = rx.search(r"nationality\s*[:\-]?\s*([A-Za-z\s]+)", text, _I)
     if m:
         out["nationality"] = _field(m.group(1).strip().upper(), 85.0, src)
 
-    m = re.search(r"profession\s*[:\-]?\s*([^\n]+)", text, _I)
+    m = rx.search(r"profession\s*[:\-]?\s*([^\n]+)", text, _I)
     if m:
         out["profession"] = _field(
             m.group(1).split("  ")[0].strip().upper(), 80.0, src)
@@ -882,7 +883,7 @@ def _apply_pattern_table(text: str, table: List[Tuple[str, str]], source: str) -
     text_clean = text.replace("\r", "\n")
     out: Dict[str, Dict] = {}
     for key, pattern in table:
-        m = re.search(pattern, text_clean, _IM)
+        m = rx.search(pattern, text_clean, _IM)
         if m:
             value = m.group(1).strip()
             out[key] = _field(value, 90.0 if len(value) > 2 else 50.0, source)
@@ -965,7 +966,7 @@ def _invoice_address(section: str) -> Optional[str]:
     picked = []
     for line in section.split("\n"):
         line = line.strip()
-        if line and re.search(r"\d+|,|street|road|avenue|city|state|zip|pincode", line, _I):
+        if line and rx.search(r"\d+|,|street|road|avenue|city|state|zip|pincode", line, _I):
             picked.append(line)
             if len(picked) >= 3:
                 break
@@ -974,13 +975,13 @@ def _invoice_address(section: str) -> Optional[str]:
 
 def _invoice_bank_details(text: str) -> Optional[dict]:
     details = {}
-    m = re.search(r"IBAN[:\s]*([A-Z0-9]{15,34})", text, _I)
+    m = rx.search(r"IBAN[:\s]*([A-Z0-9]{15,34})", text, _I)
     if m:
         details["iban"] = m.group(1)
-    m = re.search(r"SWIFT[:\s]*([A-Z0-9]{8,11})", text, _I)
+    m = rx.search(r"SWIFT[:\s]*([A-Z0-9]{8,11})", text, _I)
     if m:
         details["swift"] = m.group(1)
-    m = re.search(r"(?:account|acc)(?:\s*no|\s*number)[:\s]*(\d{8,18})", text, _I)
+    m = rx.search(r"(?:account|acc)(?:\s*no|\s*number)[:\s]*(\d{8,18})", text, _I)
     if m:
         details["account_number"] = m.group(1)
     return details or None
@@ -1007,7 +1008,7 @@ def _invoice_line_item_count(text: str) -> int:
         lower = line.lower()
         if any(w in lower for w in ("subtotal", "total", "tax", "discount", "grand")):
             break
-        if re.search(r"\d+", line):
+        if rx.search(r"\d+", line):
             count += 1
     return count
 
@@ -1016,67 +1017,67 @@ def extract_invoice(text: str) -> Dict:
     out: Dict[str, Dict] = {}
     src = "INVOICE_OCR"
 
-    m = re.search(r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", text, _I)
+    m = rx.search(r"(?:invoice\s*(?:number|no|#)|inv\s*(?:no|#))[:\s]*([A-Z0-9\-/]+)", text, _I)
     if m:
         out["invoice_number"] = _field(m.group(1).strip(), 90.0, src)
 
-    m = re.search(r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
+    m = rx.search(r"(?:invoice\s*date|date)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
     if m:
         out["invoice_date"] = _field(m.group(1), 88.0, src)
 
-    m = re.search(r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
+    m = rx.search(r"(?:due\s*date|payment\s*due)[:\s]*(\d{1,2}[/-]\d{1,2}[/-]\d{2,4}|\d{4}[/-]\d{1,2}[/-]\d{1,2})", text, _I)
     if m:
         out["due_date"] = _field(m.group(1), 88.0, src)
 
-    m = re.search(r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", text, _I)
+    m = rx.search(r"(tax\s*invoice|proforma\s*invoice|credit\s*note|debit\s*note|commercial\s*invoice)", text, _I)
     if m:
         out["invoice_type"] = _field(m.group(1), 92.0, src)
 
     # ordinal assignment: first tax-id/email/phone -> supplier, second -> customer
     tax_ids = [m.group(1).strip() for m in
-               re.finditer(r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", text, _I)]
+               rx.finditer(r"(?:GST|VAT|TIN|TAX\s*ID)[:\s]*([A-Z0-9]{8,15})", text, _I)]
     if tax_ids:
         out["supplier_tax_id"] = _field(tax_ids[0], 85.0, src)
     if len(tax_ids) > 1:
         out["customer_tax_id"] = _field(tax_ids[1], 85.0, src)
 
-    emails = re.findall(r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b", text)
+    emails = rx.findall(r"\b([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})\b", text)
     if emails:
         out["supplier_email"] = _field(emails[0], 90.0, src)
     if len(emails) > 1:
         out["customer_email"] = _field(emails[1], 90.0, src)
 
-    phones = re.findall(r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", text, _I)
+    phones = rx.findall(r"(?:phone|tel|mobile|contact)[:\s]*([+\d\s\-\(\)]{10,20})", text, _I)
     if phones:
         out["supplier_phone"] = _field(phones[0].strip(), 85.0, src)
     if len(phones) > 1:
         out["customer_phone"] = _field(phones[1].strip(), 85.0, src)
 
-    m = re.search(r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b", text)
+    m = rx.search(r"\b(USD|EUR|GBP|INR|AUD|CAD|SGD|JPY|CNY|AED)\b", text)
     if m:
         out["currency"] = _field(m.group(1), 95.0, src)
 
-    m = re.search(r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
+    m = rx.search(r"(?:subtotal|sub\s*total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
     if m:
         out["subtotal"] = _field(m.group(1).strip(), 88.0, src)
 
-    m = re.search(r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
+    m = rx.search(r"(?:tax|vat|gst)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
     if m:
         out["tax_amount"] = _field(m.group(1).strip(), 88.0, src)
 
-    m = re.search(r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", text, _I)
+    m = rx.search(r"(?:tax|vat|gst).*?(\d+(?:\.\d+)?)\s*%", text, _I)
     if m:
         out["tax_rate"] = _field(m.group(1) + "%", 90.0, src)
 
-    m = re.search(r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
+    m = rx.search(r"(?:grand\s*total|total\s*amount|net\s*total|total)[:\s]*([₹$€£¥]?\s*[\d,]+\.?\d*)", text, _I)
     if m:
         out["grand_total"] = _field(m.group(1).strip(), 90.0, src)
 
-    m = re.search(r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", text, _I)
+    m = rx.search(r"(?:payment\s*terms|terms)[:\s]*(net\s*\d+|due\s*on\s*receipt|[^.\n]{5,50})", text, _I)
     if m:
         out["payment_terms"] = _field(m.group(1).strip(), 80.0, src)
 
-    m = re.search(r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", text, _I)
+    m = rx.search(r"(?:PO|purchase\s*order)[:\s#]*([A-Z0-9\-/]+)", text, _I)
     if m:
         out["po_number"] = _field(m.group(1).strip(), 88.0, src)
 
@@ -1098,7 +1099,7 @@ def extract_invoice(text: str) -> Dict:
     if bank:
         out["bank_details"] = _field(json.dumps(bank), 85.0, src)
 
-    m = re.search(r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", text, _I)
+    m = rx.search(r"(?:notes?|remarks?|comments?)[:\s]*([^\n]{10,200})", text, _I)
     if m:
         out["notes"] = _field(m.group(1).strip(), 75.0, src)
 

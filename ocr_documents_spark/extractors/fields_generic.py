@@ -11,6 +11,8 @@ from __future__ import annotations
 import re
 from typing import Dict, List, Optional, Tuple
 
+from . import rx
+
 _IMD = re.IGNORECASE | re.MULTILINE | re.DOTALL
 
 # F2 label:value miner (reference: backend/ocr_service.py:89) and the
@@ -34,7 +36,7 @@ def first_pattern_match(text: str, patterns: List[str]) -> Tuple[str, float]:
     cascading — documented deviation, keeps the operator total.
     """
     for pattern in patterns:
-        match = re.search(pattern, text, _IMD)
+        match = rx.search(pattern, text, _IMD)
         if match:
             value = match.group(1) if match.groups() else match.group(0)
             if value is None:

@@ -26,6 +26,9 @@ census (3837/716/295/152) reproduced exactly.
 Re-run after both paths moved onto the one mapInArrow adapter, now
 comparing whole rows: 5000/5000 on both plans, census (3837/716/295/152)
 reproduced exactly.
+Re-run after the extraction-core CPU cut (required-literal regex
+prefilter, memoized HTML tag parsing, one decode per media span):
+5000/5000 on both plans, census (3837/716/295/152) reproduced exactly.
 """
 
 from __future__ import annotations

@@ -8,12 +8,16 @@ offsets so join/group cardinalities scale linearly instead of exploding:
 
 * fact/dimension keys (orderkey, custkey, partkey, suppkey, doc_id,
   vec_id, event_id, user_id) are offset by ``replica * span`` so each
-  replica is a disjoint key range;
+  replica is a disjoint key range; a key shared by several tables
+  (l_partkey/p_partkey, ...) gets ONE span from its max across all of
+  them, so replica foreign keys always land in the same replica's
+  dimension rows (and the fact side must not exceed the dimension side);
 * document text gets a per-replica prefix (and n_chars is recomputed) so
   exact/near-dup operators see distinct documents, not a 10x dup blowup
   the real generator would never produce;
-* embeddings are rolled by ``replica`` positions (norm-preserving) so
-  vector dedup does not collapse replicas into cosine-1.0 clusters;
+* embeddings of replica ``i >= 1`` are rolled by ``1 + (i - 1) % (dim - 1)``
+  positions (norm-preserving, never a multiple of ``dim``) so vector dedup
+  does not collapse replicas into cosine-1.0 clusters;
 * nation/region stay fixed (true dimensions).
 
 Timings from the output are comparable across THIS tool's outputs (same
@@ -47,22 +51,49 @@ OFFSET_KEYS = {
 }
 FIXED_DIMS = {"nation", "region"}
 
+# columns that hold the same logical key share one span; the dimension
+# column is the key's home table
+LOGICAL_KEYS = {
+    "orderkey": ("o_orderkey", ["l_orderkey"]),
+    "custkey": ("c_custkey", ["o_custkey"]),
+    "partkey": ("p_partkey", ["l_partkey"]),
+    "suppkey": ("s_suppkey", ["l_suppkey"]),
+}
 
-def _span(col: pa.ChunkedArray) -> int:
+
+def _span(mx: int) -> int:
     # power-of-10 span strictly above max(key) keeps ids readable and
     # guarantees disjoint ranges
-    mx = pc.max(col).as_py() or 0
     span = 1
     while span <= mx:
         span *= 10
     return span
 
 
-def scale_table(name: str, tbl: pa.Table, k: int) -> pa.Table:
+def key_spans(tables: dict) -> dict:
+    """Column -> offset span over ``{table name: pa.Table}``: one span per
+    logical key from its max across every table that holds it, one per
+    column for the rest.  Raises if a fact-side max exceeds its dimension's
+    (a dangling foreign key would silently drop join rows)."""
+    maxes = {c: pc.max(tbl[c]).as_py() or 0
+             for name, tbl in tables.items()
+             for c in OFFSET_KEYS.get(name, []) if c in tbl.column_names}
+    spans = {c: _span(mx) for c, mx in maxes.items()}
+    for key, (dim, facts) in LOGICAL_KEYS.items():
+        cols = [c for c in [dim, *facts] if c in maxes]
+        for fact in facts:
+            if dim in maxes and fact in maxes and maxes[fact] > maxes[dim]:
+                raise ValueError(f"{key}: {fact} max {maxes[fact]} exceeds "
+                                 f"{dim} max {maxes[dim]}")
+        span = _span(max((maxes[c] for c in cols), default=0))
+        spans.update((c, span) for c in cols)
+    return spans
+
+
+def scale_table(name: str, tbl: pa.Table, k: int, spans: dict) -> pa.Table:
     if name in FIXED_DIMS or k == 1:
         return tbl
     keys = OFFSET_KEYS.get(name, [])
-    spans = {c: _span(tbl[c]) for c in keys}
     reps = []
     for i in range(k):
         t = tbl
@@ -80,7 +111,8 @@ def scale_table(name: str, tbl: pa.Table, k: int) -> pa.Table:
         if name == "embeddings" and i > 0:
             emb = t["embedding"].combine_chunks()
             arrs = emb.to_numpy(zero_copy_only=False)
-            rolled = [np.roll(np.asarray(a, dtype=np.float32), i)
+            rolled = [np.roll(np.asarray(a, dtype=np.float32),
+                              1 + (i - 1) % max(len(a) - 1, 1))
                       for a in arrs]
             new = pa.array([list(map(float, a)) for a in rolled],
                            type=t.schema.field("embedding").type)
@@ -93,12 +125,16 @@ def scale_table(name: str, tbl: pa.Table, k: int) -> pa.Table:
 def main() -> None:
     src, dst, k = sys.argv[1], sys.argv[2], int(sys.argv[3])
     os.makedirs(dst, exist_ok=True)
-    for f in sorted(os.listdir(src)):
-        if not f.endswith(".parquet"):
-            continue
-        name = f[:-len(".parquet")]
+    names = sorted(f[:-len(".parquet")] for f in os.listdir(src)
+                   if f.endswith(".parquet"))
+    spans = key_spans({
+        name: pq.read_table(os.path.join(src, f"{name}.parquet"),
+                            columns=OFFSET_KEYS[name])
+        for name in names if name in OFFSET_KEYS})
+    for name in names:
+        f = f"{name}.parquet"
         tbl = pq.read_table(os.path.join(src, f))
-        out = scale_table(name, tbl, k)
+        out = scale_table(name, tbl, k, spans)
         pq.write_table(out, os.path.join(dst, f))
         print(f"{name}: {tbl.num_rows} -> {out.num_rows}")
 
