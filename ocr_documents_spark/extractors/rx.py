@@ -128,16 +128,16 @@ def compile(pattern: str, flags: int = 0) -> Prefiltered:
 
 
 def search(pattern: str, text: str, flags: int = 0) -> Optional[re.Match]:
-    return (_CACHE.get((pattern, flags)) or compile(pattern, flags)).search(text)
+    return compile(pattern, flags).search(text)
 
 
 def match(pattern: str, text: str, flags: int = 0) -> Optional[re.Match]:
-    return (_CACHE.get((pattern, flags)) or compile(pattern, flags)).match(text)
+    return compile(pattern, flags).match(text)
 
 
 def findall(pattern: str, text: str, flags: int = 0) -> list:
-    return (_CACHE.get((pattern, flags)) or compile(pattern, flags)).findall(text)
+    return compile(pattern, flags).findall(text)
 
 
 def finditer(pattern: str, text: str, flags: int = 0) -> Iterator[re.Match]:
-    return (_CACHE.get((pattern, flags)) or compile(pattern, flags)).finditer(text)
+    return compile(pattern, flags).finditer(text)
