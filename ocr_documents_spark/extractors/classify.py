@@ -21,9 +21,9 @@ Rule tables are data; patterns are pre-compiled once at import so executor
 processes pay the compile cost a single time (mirrors the reference's
 singleton classifiers, and is the right shape for SCALAR pandas UDFs).
 The enhanced rules sit behind the required-literal prefilter of
-:mod:`.rx`: on ASCII text, a rule whose keyword is absent is answered
-without a regex scan; every other text runs the same compiled pattern, so
-results keep Python ``re`` semantics exactly.
+:mod:`.rx`: a rule whose keyword is absent from the case-folded text is
+answered without a regex scan, on any script; otherwise the same compiled
+pattern runs, so results keep Python ``re`` semantics exactly.
 
 The scoring surface is a term-frequency dot product with binary weights —
 the "rules-plus-TF-IDF" classifier named by the north star.  Both

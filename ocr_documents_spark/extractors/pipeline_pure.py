@@ -66,7 +66,7 @@ def recover_span_text(kind: Optional[str], text: Optional[str],
 
 
 def recover_pages(spans: Sequence[Dict[str, Any]],
-                  probe: Optional[Probe] = None) -> List[Dict[str, Any]]:
+                  probe: Optional[Probe]) -> List[Dict[str, Any]]:
     """Spans (any order) -> offset-ordered pages with recovered text; only
     media-derived pages keep their media_ref.  ``probe`` is the gate's
     ``(media_ref, decode)`` of the first media span; a media span with that

@@ -9,11 +9,12 @@ lookarounds and non-ASCII literals contribute nothing, so the derivation
 only ever under-approximates.
 
 ``search``/``match``/``findall``/``finditer`` return the no-match value
-without scanning when the text is ASCII and a required set is absent from
-its lowercased form; otherwise they call the same compiled pattern.  The
-ASCII guard is what makes the shortcut exact: under ``re.IGNORECASE``
-Python folds ``ſ``, the Kelvin sign (U+212A), ``ı`` and ``İ`` onto ASCII
-letters, so non-ASCII text always runs the full regex.
+without scanning when a required set is absent from the text's folded form
+(:func:`fold`); otherwise they call the same compiled pattern.  The fold is
+what makes the shortcut exact for every text, ASCII or not: it maps each
+character that ``re`` can match against an ASCII literal onto that
+literal's lowercase letter, so a match's literal run is always a substring
+of the folded text.
 """
 
 from __future__ import annotations
@@ -25,9 +26,19 @@ from typing import Dict, Iterator, List, Optional, Tuple
 _REPEAT_OPS = (_parser.MAX_REPEAT, _parser.MIN_REPEAT,
                _parser.POSSESSIVE_REPEAT)
 
-# one-entry cache (text, lowercased text or None when non-ASCII), read and
-# written as a single tuple so concurrent threads never see a torn pair
-_last: Tuple[Optional[str], Optional[str]] = (None, None)
+# one-entry cache (text, fold(text)), read and written as a single tuple so
+# concurrent threads never see a torn pair
+_last: Tuple[Optional[str], str] = (None, "")
+
+
+def fold(text: str) -> str:
+    """``text`` lowercased so that every character ``re.IGNORECASE`` matches
+    against an ASCII letter becomes that letter.  Besides the ASCII pairs
+    these are the Kelvin sign (U+212A, which ``str.lower`` maps to ``k``),
+    ``İ`` (which ``str.lower`` turns into ``i`` plus a combining dot), ``ı``
+    and ``ſ`` (which it leaves alone); see ``re._casefix``."""
+    return (text.replace("\u0130", "i").replace("\u0131", "i")
+            .replace("\u017f", "s").lower())
 
 
 def _seq_required(items) -> List[Tuple[str, ...]]:
@@ -91,10 +102,8 @@ class Prefiltered:
         if last[0] is text:
             low = last[1]
         else:
-            low = text.lower() if text.isascii() else None
+            low = fold(text)
             _last = (text, low)
-        if low is None:
-            return False
         for alts in self.required:
             for lit in alts:
                 if lit in low:

@@ -5,12 +5,16 @@
   ``search``/``match``/``findall``/``finditer`` equal the raw compiled
   pattern's results on texts built from the pattern's own literals;
 * fold traps: ``re.IGNORECASE`` folds ``ſ``, the Kelvin sign (U+212A), ``ı`` and
-  ``İ`` onto ASCII letters, so a keyword spelled with them still matches.
+  ``İ`` onto ASCII letters, so a keyword spelled with them still matches;
+  ``rx.fold`` maps every such character, over all of Unicode, and a page
+  in another script is prefiltered like an ASCII one.
 """
 
 import ast
 import inspect
 import re
+import string
+import sys
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -107,11 +111,18 @@ def _routed_patterns() -> list:
         pats.update((p.regex.pattern, p.regex.flags & ~re.UNICODE)
                     for group in row[1:5] for p in group)
     # patterns built at run time (f-strings over keyword lists) are known
-    # once the oracle has run over a stream that reaches every extractor
-    for i in range(400):
-        d = make_document(i, 7)
-        process_document(d["doc_id"], d["spans"])
-    pats.update(rx._CACHE)
+    # once the oracle has run over a stream that reaches every extractor;
+    # they are gathered in an emptied cache, so the list does not depend on
+    # what earlier tests in this process compiled
+    saved = dict(rx._CACHE)
+    rx._CACHE.clear()
+    try:
+        for i in range(400):
+            d = make_document(i, 7)
+            process_document(d["doc_id"], d["spans"])
+        pats.update(rx._CACHE)
+    finally:
+        rx._CACHE.update(saved)
     return sorted(pats)
 
 
@@ -121,7 +132,10 @@ _SEPARATORS = [" ", "  ", "\n", ": ", ":", " - ", "/", "\t", "#", ".", ""]
 _TOKENS = ["P<IND", "784-1234-1234567-1", "12/03/2020", "2020/03/12",
            "A1234567", "123456789", "4321 8765 2109", "LLC", "L.L.C", "AED",
            "15%", "MALE", "john.doe@example.com", "+971 50 123 4567",
-           "Abc Def Ghi", "2", "0", "x", "ſ", "K", "ı", "İ", "عمل"]
+           "Abc Def Ghi", "2", "0", "x", "ſ", "K", "ı", "İ", "عمل",
+           "اسم الشركة", "₹", "€", "Σ"]
+# non-ASCII spellings that re.IGNORECASE matches against an ASCII letter
+_FOLD_VARIANTS = {"i": "ıİ", "s": "ſ", "k": "\u212a"}
 
 
 @st.composite
@@ -133,10 +147,10 @@ def _text_for(draw, pattern: str):
         kind = draw(st.integers(0, 3))
         if kind == 0 and words:
             word = draw(st.sampled_from(words))
-            case = draw(st.lists(st.booleans(), min_size=len(word),
-                                 max_size=len(word)))
-            pieces.append("".join(c.upper() if up else c.lower()
-                                  for c, up in zip(word, case)))
+            pieces.append("".join(
+                draw(st.sampled_from(c.lower() + c.upper()
+                                     + _FOLD_VARIANTS.get(c.lower(), "")))
+                for c in word))
         elif kind == 1:
             pieces.append(draw(st.sampled_from(_SEPARATORS)))
         elif kind == 2:
@@ -220,6 +234,26 @@ def test_fold_trap_field_pattern(spelling):
     pattern = dict(doc_types._LICENSE_TABLE)["license_no"]
     assert _m(rx.search(pattern, text, doc_types._IM)) == _m(
         re.search(pattern, text, doc_types._IM))
+
+
+def test_fold_covers_every_ignorecase_match_of_an_ascii_char():
+    every = "".join(chr(c) for c in range(sys.maxunicode + 1)
+                    if not 0xD800 <= c <= 0xDFFF)
+    non_ascii = set()
+    for c in string.ascii_letters + string.digits + string.punctuation:
+        for m in re.finditer(re.escape(c), every, re.I):
+            assert rx.fold(m.group()) == c.lower(), (c, m.group())
+            if not m.group().isascii():
+                non_ascii.add(m.group())
+    assert non_ascii == {"\u017f", "\u212a", "\u0131", "\u0130"}
+
+
+def test_mixed_script_page_is_prefiltered():
+    # Arabic and currency symbols on a page do not switch the filter off
+    p = rx.Prefiltered("passport", re.I)
+    p.regex = None                      # any regex scan would raise
+    assert p.search("اسم الشركة ₹ 500 visa") is None
+    assert p.findall("VISA € Σ") == []
 
 
 def test_lowercase_cache_follows_the_text():
