@@ -27,7 +27,6 @@ tag soup degrades gracefully (unmatched closes are ignored).
 
 from __future__ import annotations
 
-import functools
 import html as _html
 import re
 from typing import Dict, List, Optional, Tuple
@@ -90,19 +89,6 @@ def _container_hints(tag: str, attrs: str) -> Tuple[bool, bool]:
                 neg = neg or token in _HINT_CLASS_TOKENS
                 pos = pos or token in _POSITIVE_CLASS_TOKENS
     return neg, pos
-
-
-@functools.lru_cache(maxsize=4096)
-def _parse_tag(token: str) -> Optional[Tuple[bool, str, bool, bool, bool, bool]]:
-    """One tag token -> (closing, tag, is_block, is_void, neg, pos), or None
-    for a malformed tag.  Memoized: a page repeats a handful of distinct
-    tags many times over."""
-    m = _TAG_PARSE_RE.match(token)
-    if not m:
-        return None
-    closing, tag = m.group(1) == "/", m.group(2).lower()
-    neg, pos = (False, False) if closing else _container_hints(tag, m.group(3))
-    return closing, tag, tag in _BLOCK_TAGS, tag in _VOID_TAGS, neg, pos
 
 
 class Block:
@@ -181,17 +167,18 @@ def segment_blocks(raw_html: str) -> List[Block]:
                 parts.append(" ")
             continue
 
-        parsed = _parse_tag(token)
-        if parsed is None:  # malformed tag: treat as inert
+        m = _TAG_PARSE_RE.match(token)
+        if not m:           # malformed tag: treat as inert
             continue
-        closing, tag, is_block, is_void, neg, pos = parsed
-        if is_block:
+        closing, tag, attrs = m.group(1) == "/", m.group(2).lower(), m.group(3)
+        if tag in _BLOCK_TAGS:
             flush()
             if tag == "title":
                 in_title = max(0, in_title + (-1 if closing else 1))
-        if is_void:
+        if tag in _VOID_TAGS:
             continue
         if not closing:
+            neg, pos = _container_hints(tag, attrs)
             is_link = tag == "a"
             stack.append((tag, neg, pos, is_link))
             open_counts[tag] = open_counts.get(tag, 0) + 1

@@ -12,10 +12,9 @@ Lifecycle mirrored from the reference's live path (backend/main.py:94-234):
    other recovery work (backend/image_quality_checker.py first-page probe
    :242-254); a failing document stops here,
 2. recover page text per span in offset order (media spans decoded via the
-   deterministic OCR stand-in, the gate's probe decode reused for the first
-   media span so no span is decoded twice; born-digital text spans pass
-   through with the 85.0 default confidence the reference assigns to
-   pre-extracted text, backend/ocr_service.py:1536),
+   deterministic OCR stand-in; born-digital text spans pass through with the
+   85.0 default confidence the reference assigns to pre-extracted text,
+   backend/ocr_service.py:1536),
 3. classify the offset-ordered concatenated text with the enhanced
    classifier; reject below confidence 40 or UNKNOWN (backend/main.py:162),
 4. per-page field extraction with first-match-wins merge across pages
@@ -43,8 +42,6 @@ from .registry import CLASSIFY_MIN_CONFIDENCE, COMPLETED_FIELD_FRACTION, expecte
 TEXT_SPAN_CONFIDENCE = 85.0  # backend/ocr_service.py:1536 (pre-extracted text)
 
 OutSpan = Tuple[str, Optional[str], Optional[str], int]
-# the gate's first-media-span decode: (media_ref, decode_media_ref(media_ref))
-Probe = Tuple[str, Tuple[str, float, Dict[str, Any]]]
 
 
 def recover_span_text(kind: Optional[str], text: Optional[str],
@@ -65,20 +62,13 @@ def recover_span_text(kind: Optional[str], text: Optional[str],
     return text or "", TEXT_SPAN_CONFIDENCE
 
 
-def recover_pages(spans: Sequence[Dict[str, Any]],
-                  probe: Optional[Probe]) -> List[Dict[str, Any]]:
+def recover_pages(spans: Sequence[Dict[str, Any]]) -> List[Dict[str, Any]]:
     """Spans (any order) -> offset-ordered pages with recovered text; only
-    media-derived pages keep their media_ref.  ``probe`` is the gate's
-    ``(media_ref, decode)`` of the first media span; a media span with that
-    ref takes the probe's text and confidence instead of a second decode."""
+    media-derived pages keep their media_ref."""
     pages = []
     for span in sorted(spans, key=lambda s: s["offset"]):
-        if (probe is not None and span["kind"] == "media"
-                and span["media_ref"] == probe[0]):
-            text, conf, _qc = probe[1]
-        else:
-            text, conf = recover_span_text(span["kind"], span["text"],
-                                           span["media_ref"])
+        text, conf = recover_span_text(span["kind"], span["text"],
+                                       span["media_ref"])
         pages.append({"text": text, "confidence": conf,
                       "media_ref": (span["media_ref"]
                                     if span["kind"] == "media" else None)})
@@ -186,17 +176,14 @@ def process_recovered(doc_id: str, pages: Sequence[Dict[str, Any]],
 
 def document_quality_report(spans: Sequence[Dict[str, Any]],
                             skip_quality_check: bool = False
-                            ) -> Tuple[bool, List[str], List[str],
-                                       Optional[Probe]]:
+                            ) -> Tuple[bool, List[str], List[str]]:
     """Gate on the FIRST media span's metrics only — decoded BEFORE any
     other recovery work (cheap-first; the reference renders only page 1 at
     reduced dpi for the same reason, backend/image_quality_checker.py:245).
-    -> (passed, issues, warnings, probe): the full Q5 surface, plus the
-    probe ``(media_ref, decode)`` for :func:`recover_pages` to reuse (None
-    when nothing was decoded).
+    -> (passed, issues, warnings) — the full Q5 surface.
     """
     if skip_quality_check:
-        return True, [], [], None
+        return True, [], []
     first_ref = None
     first_key = None
     for s in spans:
@@ -212,23 +199,21 @@ def document_quality_report(spans: Sequence[Dict[str, Any]],
         if first_key is None or key < first_key:
             first_key, first_ref = key, ref
     if first_ref is None:
-        return True, [], [], None  # born-digital document: nothing to gate on
-    decoded = decode_media_ref(first_ref)
-    qc = decoded[2]
+        return True, [], []  # born-digital document: nothing to gate on
+    _text, _conf, qc = decode_media_ref(first_ref)
     passed, _score, issues, warnings = quality_report(
         qc.get("w", 0), qc.get("h", 0), qc.get("blur", 0.0),
         qc.get("brightness", 0.0), qc.get("contrast", 0.0),
         qc.get("skew", 0.0))
-    return passed, issues, warnings, (first_ref, decoded)
+    return passed, issues, warnings
 
 
 def process_document(doc_id: str, spans: Sequence[Dict[str, Any]],
                      skip_quality_check: bool = False,
                      forced_type: Optional[str] = None) -> Dict[str, Any]:
     """Full oracle pipeline for one document (gate first, then recover)."""
-    ok, issues, warnings, probe = document_quality_report(spans,
-                                                          skip_quality_check)
+    ok, issues, warnings = document_quality_report(spans, skip_quality_check)
     if not ok:
         return rejected_quality_result(doc_id, len(spans), issues, warnings)
-    return process_recovered(doc_id, recover_pages(spans, probe), forced_type,
+    return process_recovered(doc_id, recover_pages(spans), forced_type,
                              quality_warnings=warnings)
